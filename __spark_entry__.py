@@ -24,32 +24,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from key_resource_table_extractor_spark import job  # noqa: E402
 from key_resource_table_extractor_spark import operators  # noqa: E402
-from key_resource_table_extractor_spark.schemas import (  # noqa: E402
-    DOCUMENT_SPANS_SCHEMA,
-)
-
-
-def _spans_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic spans corpus keyed by the documents table's doc_ids."""
-    from key_resource_table_extractor_spark import synth
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-
-    def gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                key = f"sfdoc_{int(did)}"
-                spans = [
-                    {"kind": k, "text": t, "media_ref": m, "offset": o}
-                    for (k, t, m, o) in synth.generate_doc(key)
-                ]
-                rows.append((key, spans))
-            yield pd.DataFrame(rows, columns=["doc_id", "spans"])
-
-    return docs.mapInPandas(gen, DOCUMENT_SPANS_SCHEMA)
 
 
 def _doc_ids_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -68,12 +42,9 @@ def _doc_ids_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_extract_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: full extraction cascade (SURVEY §7.2 v1–v2 semantics).
-    Fused synth+extract in one Python stage (make_synth_extract_fn)."""
-    ids = _doc_ids_partitioned(spark, sf_dir)
-    out = ids.mapInPandas(
-        job.make_synth_extract_fn(), job.EXTRACTED_SPANS_DDL
-    )
-    return job.data_spans(out)
+    Synthesis and extraction run in one Python stage: ``job.extract``
+    over the bare doc ids uses the adapter's synth span source."""
+    return job.data_spans(job.extract(_doc_ids_partitioned(spark, sf_dir)))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -82,13 +53,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def q_extract_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nested result-JSON variant of the flagship (reference S7 shape).
-    Fused synth+extract like the flat path."""
-    ids = _doc_ids_partitioned(spark, sf_dir)
-    return ids.mapInPandas(
-        job.make_synth_extract_fn(nested=True),
-        "doc_id string, result string",
-    )
+    """Nested result-JSON variant of the flagship (reference S7 shape),
+    synthesized in-stage like the flat path."""
+    return job.extract_nested(_doc_ids_partitioned(spark, sf_dir))
 
 
 def q_extract_nested_colspans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,24 +65,19 @@ def q_extract_nested_colspans(spark: SparkSession, sf_dir: str) -> DataFrame:
     physically-evident mid-row spans), rowspans from the anchor row
     model's fold evidence (an anchor-less source line with >=2 non-empty
     cells is a covered detected row, not a wrap fragment)."""
-    ids = _doc_ids_partitioned(spark, sf_dir)
-    return ids.mapInPandas(
-        job.make_synth_extract_fn(
-            nested=True, with_colspans=True, row_model="anchor"
-        ),
-        "doc_id string, result string",
+    return job.extract_nested(
+        _doc_ids_partitioned(spark, sf_dir),
+        with_colspans=True,
+        row_model="anchor",
     )
 
 
 def q_extract_spans_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship under the detected-row merge model (J4 analog,
     row_model="anchor") instead of the continuation-vote model."""
-    ids = _doc_ids_partitioned(spark, sf_dir)
-    out = ids.mapInPandas(
-        job.make_synth_extract_fn(row_model="anchor"),
-        job.EXTRACTED_SPANS_DDL,
+    return job.data_spans(
+        job.extract(_doc_ids_partitioned(spark, sf_dir), row_model="anchor")
     )
-    return job.data_spans(out)
 
 
 # the driver's correctness gate records exactly the FIRST 50 queries()
@@ -125,12 +87,12 @@ def q_extract_spans_anchor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # always dark; to give every rows-only op periodic driver visibility we
 # ROTATE per round: three redundant D queries (each with an in-window
 # sibling exercising the same plan shape) step out and a trio of
-# rows-only ops steps in. The rotation index derives from the latest
-# CORRECTNESS_r*.json the driver committed, so it advances exactly once
-# per round and every trio is driver-recorded at least every third
-# round. Out-of-window D queries are still value-checked by
-# scripts/check_queries.py and tests/test_queries_vs_duckdb.py;
-# tests pin the window invariants so additions can't silently demote.
+# rows-only ops steps in. The rotation index derives from the checked-in
+# ROUND file, so it advances exactly once per round and every trio is
+# driver-recorded at least every third round. Out-of-window D queries are
+# still value-checked by scripts/check_queries.py and
+# tests/test_queries_vs_duckdb.py; tests pin the window invariants so
+# additions can't silently demote.
 DRIVER_GATE_WINDOW = 50
 DEMOTED = [
     # J8 join-agg evidence duplicated by top_revenue_nations and
@@ -185,20 +147,14 @@ def _rotation_index() -> int:
     """Round parity for the gate-window rotation. Resolution order:
     `KRT_ROTATION_INDEX` env override; else the checked-in one-line
     `ROUND` file (the current round number, bumped each round alongside
-    the snapshot — index = (ROUND - 1) % len, matching the historical
-    max(CORRECTNESS_r{N}) derivation since round N runs with rounds
-    1..N-1's artifacts committed); else the legacy CORRECTNESS glob for
-    a tree without the file. The ROUND file makes a fresh clone resolve
-    the same index as the working tree deterministically. The resolved
-    index and its source are logged once per process so every gate
-    record is attributable to a window composition."""
-    import glob
-    import re
-
+    the snapshot — index = (ROUND - 1) % len). The ROUND file makes a
+    fresh clone resolve the same index as the working tree
+    deterministically. The resolved index and its source are logged once
+    per process so every gate record is attributable to a window
+    composition."""
     global _ROTATION_LOGGED
     here = os.path.dirname(os.path.abspath(__file__))
     env = os.environ.get("KRT_ROTATION_INDEX", "").strip()
-    round_file = os.path.join(here, "ROUND")
     if env:
         try:
             ri = int(env) % len(ROWS_ONLY_ROTATION)
@@ -207,8 +163,8 @@ def _rotation_index() -> int:
                 f"KRT_ROTATION_INDEX must be an integer, got {env!r}"
             ) from None
         src = f"env={env}"
-    elif os.path.exists(round_file):
-        with open(round_file) as fh:
+    else:
+        with open(os.path.join(here, "ROUND")) as fh:
             raw = fh.read().strip()
         try:
             rnd = int(raw)
@@ -218,14 +174,6 @@ def _rotation_index() -> int:
             ) from None
         ri = (rnd - 1) % len(ROWS_ONLY_ROTATION)
         src = f"ROUND={rnd}"
-    else:
-        ns = [
-            int(mm.group(1))
-            for f in glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
-            if (mm := re.search(r"CORRECTNESS_r(\d+)\.json$", f))
-        ]
-        ri = (max(ns) if ns else 0) % len(ROWS_ONLY_ROTATION)
-        src = f"max(CORRECTNESS_r*)={max(ns) if ns else 0}"
     if not _ROTATION_LOGGED:
         _ROTATION_LOGGED = True
         print(

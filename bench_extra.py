@@ -1,9 +1,13 @@
 #!/usr/bin/env python
 """Extra benchmarks (guide §1.4 noop-sink isolation) — NOT the frozen
 headline bench. Used to attribute time inside composite query paths and to
-A/B candidate optimizations. Results cited in OPTIMIZATION_r08.md.
+A/B candidate optimizations. The run_extraction layer split (scan/exchange,
+Python stage, sink) lives in perfbench (``--trace 1``).
 
-Usage: python bench_extra.py <case> [...]
+Cases:
+  extract_leaves  best-of-2 noop-sink time of each extract_* entry query
+
+Usage: python bench_extra.py [case ...]
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (same contract as bench.py).
 """
 
@@ -15,8 +19,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from pyspark.sql import functions as F  # noqa: E402
 
 
 def force(df):
@@ -37,10 +39,12 @@ def timed(spark, label, mk, passes=2):
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    cases = sys.argv[1:] or ["extract_decomp"]
+    cases = sys.argv[1:] or ["extract_leaves"]
+    unknown = set(cases) - {"extract_leaves"}
+    if unknown:
+        sys.exit(f"unknown case(s): {sorted(unknown)}")
 
     import __spark_entry__ as entry
-    from key_resource_table_extractor_spark import job
     from key_resource_table_extractor_spark.session import build_session
 
     spark = build_session(
@@ -52,40 +56,17 @@ def main():
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     def _noop(it):
-        for pdf in it:
-            yield pdf
+        yield from it
 
-    spark.range(0, cpus * 10, numPartitions=cpus).mapInPandas(
+    spark.range(0, cpus * 10, numPartitions=cpus).mapInArrow(
         _noop, "id long"
     ).write.format("noop").mode("overwrite").save()
 
-    sc = spark.sparkContext
-
-    if "extract_decomp" in cases:
-        # 1. synthesis only (current shape: scan -> mapInPandas gen)
-        sc.setJobDescription("synth only")
-        timed(
-            spark,
-            "synth_only",
-            lambda: entry._spans_from_documents(spark, sf_dir),
-        )
-        # 2. synthesis + salted repartition (adds the spans exchange)
-        sc.setJobDescription("synth + salted repartition")
-        timed(
-            spark,
-            "synth_salted",
-            lambda: job.salted_repartition(
-                entry._spans_from_documents(spark, sf_dir),
-                sc.defaultParallelism,
-            ),
-        )
-        # 3. full current flagship
-        sc.setJobDescription("full extract_spans (current)")
-        timed(
-            spark,
-            "extract_spans_current",
-            lambda: entry.q_extract_spans(spark, sf_dir),
-        )
+    if "extract_leaves" in cases:
+        queries = entry.queries()
+        for name in ("extract_spans", "extract_spans_anchor",
+                     "extract_nested", "extract_nested_colspans"):
+            timed(spark, name, lambda q=queries[name]: q(spark, sf_dir))
 
     spark.stop()
 

@@ -1,7 +1,6 @@
 from .pipeline import (  # noqa: F401
+    ExtractOptions,
     extract_nested_batch,
     extract_pandas_batch,
     make_map_in_arrow_fn,
-    make_map_in_pandas_fn,
-    make_nested_map_in_pandas_fn,
 )

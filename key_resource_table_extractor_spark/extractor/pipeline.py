@@ -1,8 +1,9 @@
 """Vectorized per-batch extraction (the Spark-side implementation).
 
 The whole five-stage cascade of the reference (SURVEY.md §0) runs as a pure
-function over one Arrow batch of ``(doc_id, spans)`` rows inside
-``mapInPandas`` / ``mapInArrow``. Design:
+function over one Arrow batch of ``(doc_id, spans)`` rows inside ONE
+``mapInArrow`` adapter (``make_map_in_arrow_fn``), configured by one
+validated ``ExtractOptions`` record. Design:
 
 - batch-global passes (line features, in-table scoring, gap fill, island
   detection) are fully vectorized with pandas/numpy over *all* lines of *all*
@@ -24,11 +25,14 @@ from __future__ import annotations
 import json
 import re
 import traceback
+from dataclasses import InitVar, dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
-from .. import spec
+from .. import spec, synth
 
 _SEG_RE = re.compile(spec.SEGMENT_REGEX)
 
@@ -42,12 +46,77 @@ _KIND_ERROR = "error"
 
 OUTPUT_COLUMNS = ["doc_id", "seq", "kind", "text", "media_ref", "offset"]
 
+ROW_MODELS = ("votes", "anchor", "none")
+OUTPUT_MODES = ("spans", "nested", "nested-colspans")
+
+
+@dataclass(frozen=True)
+class ExtractOptions:
+    """The extraction options, validated and defaulted once: a value
+    outside ``ROW_MODELS`` / ``OUTPUT_MODES`` raises ``ValueError``.
+
+    An unset ``row_model`` resolves from ``merge_rows``, the reference's
+    use_row_info switch (README:121-122). ``excepted_lines`` /
+    ``excepted_pages`` drop per-doc text lines / detected regions by
+    index, negative = from the end (PDFTableExtractor2.java:93-128).
+    ``output_mode`` picks the renderer; ``midcol_rowspans`` only means
+    something, so is only accepted, under nested-colspans + anchor (see
+    ``extract_nested_batch``)."""
+
+    row_model: str | None = None
+    excepted_lines: tuple[int, ...] = ()
+    excepted_pages: tuple[int, ...] = ()
+    gap_min_spaces: int | None = None
+    output_mode: str = "spans"
+    midcol_rowspans: bool = False
+    merge_rows: InitVar[bool] = True
+
+    def __post_init__(self, merge_rows: bool):
+        row_model = self.row_model or ("votes" if merge_rows else "none")
+        for name, value, allowed in (
+            ("row_model", row_model, ROW_MODELS),
+            ("output_mode", self.output_mode, OUTPUT_MODES),
+        ):
+            if value not in allowed:
+                raise ValueError(
+                    f"{name} must be one of {allowed}, got {value!r}"
+                )
+        if self.midcol_rowspans and (
+            (self.output_mode, row_model) != ("nested-colspans", "anchor")
+        ):
+            raise ValueError("midcol_rowspans needs nested-colspans + anchor")
+        gap = self.gap_min_spaces
+        for name, value in (
+            ("row_model", row_model),
+            ("excepted_lines", tuple(self.excepted_lines or ())),
+            ("excepted_pages", tuple(self.excepted_pages or ())),
+            ("gap_min_spaces", spec.GAP_MIN_SPACES if gap is None else gap),
+        ):
+            object.__setattr__(self, name, value)
+
+    @classmethod
+    def of(cls, opts: ExtractOptions | None = None, **kw) -> ExtractOptions:
+        """``opts`` itself, or a record built from option keywords."""
+        if opts is not None and kw:
+            raise TypeError(
+                f"pass ExtractOptions or keywords, not both: {sorted(kw)}"
+            )
+        return opts or cls(**kw)
+
+    @property
+    def with_extents(self) -> bool:
+        """Only the colspan renderer reads per-cell column extents."""
+        return self.output_mode == "nested-colspans"
+
+
+DEFAULT_OPTIONS = ExtractOptions()
+
 
 # --------------------------------------------------------------------------
 # batch-global vectorized passes
 # --------------------------------------------------------------------------
 
-def _segment_scan(texts: np.ndarray, gap_min_spaces: int = spec.GAP_MIN_SPACES):
+def _segment_scan(texts: np.ndarray, gap_min_spaces: int):
     """Flat segment arrays for all lines: (line_idx, start, end, text)."""
     seg_line: list[int] = []
     seg_start: list[int] = []
@@ -209,7 +278,6 @@ def _column_union(starts: np.ndarray, ends: np.ndarray):
     brk = np.empty(len(s), dtype=bool)
     brk[0] = True
     brk[1:] = s[1:] > cmax[:-1] + spec.COLUMN_MERGE_TOL
-    grp = np.cumsum(brk) - 1
     # group starts: first s per group (s sorted asc), ends: max e per group
     first = brk
     col_s = s[first]
@@ -294,22 +362,22 @@ def _extract_doc_regions(
     media_off: np.ndarray,
     media_ref: np.ndarray,
     out: dict,
-    merge_rows: bool = True,
-    excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
-    with_extents: bool = False,
-    midcol_rowspans: bool = False,
+    opts: ExtractOptions,
 ) -> int:
     """Emit one doc's regions into the output accumulator. Returns #tables.
 
-    ``merge_rows=False`` is the reference's ``use_row_info`` switch analog
-    (pipeline A vs B, reference README:121-122, PDFTableExtractor2.java:
-    200-208): physical rows are emitted as-is, no continuation merging.
+    ``opts.row_model="none"`` is the reference's ``use_row_info`` switch
+    analog (pipeline A vs B, reference README:121-122,
+    PDFTableExtractor2.java:200-208): physical rows are emitted as-is, no
+    continuation merging.
 
-    ``excepted_pages`` skips detected regions by index in the doc's
+    ``opts.excepted_pages`` skips detected regions by index in the doc's
     detection order (negative = from the end, out-of-range ignored —
     reference PDFTableExtractor2.java:641-651).
     """
+    with_extents = opts.with_extents
+    excepted_pages = opts.excepted_pages
+    midcol_rowspans = opts.midcol_rowspans
     n_tables = 0
     media_used = np.zeros(len(media_off), dtype=bool)
     kept = np.flatnonzero(region_id >= 0)
@@ -380,7 +448,7 @@ def _extract_doc_regions(
             rows_l = gl[nonempty]
         row_lines = lines_idx[nonempty]
         hdr = is_header[row_lines]
-        mode = row_model or ("votes" if merge_rows else "none")
+        mode = opts.row_model
         cont_full = None
         if mode == "anchor":
             # J4 analog (reference PDFTableExtractor2.java:334-380): rows
@@ -543,6 +611,20 @@ def _extract_doc_regions(
 # batch entry points
 # --------------------------------------------------------------------------
 
+_META_ROW = {
+    "media_ref": "", "offset": -1, "table": -1, "row": -1, "col": -1,
+    "fullspan": False, "cfirst": -1, "clast": -1, "rowspan": 1,
+}
+
+
+def _append_meta_row(out: dict, doc_id: str, kind: str, text: str) -> None:
+    """Append a non-cell row (per-doc error, per-batch stats) to EVERY
+    output column, so the extent columns stay aligned with the rest."""
+    row = {"doc_id": doc_id, "kind": kind, "text": text, **_META_ROW}
+    for col, values in out.items():
+        values.append(row[col])
+
+
 def extract_columnar(
     doc_ids: np.ndarray,
     span_doc: np.ndarray,
@@ -550,26 +632,22 @@ def extract_columnar(
     texts: np.ndarray,
     media_refs: np.ndarray,
     offsets: np.ndarray,
-    merge_rows: bool = True,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
-    gap_min_spaces: int = spec.GAP_MIN_SPACES,
-    with_extents: bool = False,
-    midcol_rowspans: bool = False,
+    opts: ExtractOptions = DEFAULT_OPTIONS,
 ) -> dict:
     """Extraction over flat columnar span arrays for a batch of docs.
     Returns a dict of output columns (lists / numpy arrays), including the
     internal ``table``/``row``/``col`` lineage used by the nested renderer.
 
     ``span_doc`` maps each span to its doc index in ``doc_ids``. Spans need
-    not be pre-sorted; we sort by (doc, offset) here.
+    not be pre-sorted; we sort by (doc, offset) here (stable, so equal
+    offsets keep their input order).
 
-    ``with_extents=True`` additionally carries per-cell physical column
-    extents (``cfirst``/``clast``) for spanning-cell recovery — only the
-    colspan-aware nested renderer needs them, and the extra per-cell work
-    costs ~20% kernel throughput, so the flat path skips them.
+    ``opts.with_extents`` (nested-colspans only) additionally carries
+    per-cell physical column extents (``cfirst``/``clast``) for
+    spanning-cell recovery — the extra per-cell work costs ~20% kernel
+    throughput, so the other modes skip it.
     """
+    with_extents = opts.with_extents
     order = np.lexsort((offsets, span_doc))
     span_doc, kinds, texts = span_doc[order], kinds[order], texts[order]
     media_refs, offsets = media_refs[order], offsets[order]
@@ -578,8 +656,8 @@ def extract_columnar(
     li_doc = span_doc[is_text]
     li_off = offsets[is_text]
     li_texts_raw = texts[is_text]
-    if excepted_lines:
-        li_keep = _excepted_lines_keep_mask(li_doc, excepted_lines)
+    if opts.excepted_lines:
+        li_keep = _excepted_lines_keep_mask(li_doc, opts.excepted_lines)
         li_doc = li_doc[li_keep]
         li_off = li_off[li_keep]
         li_texts_raw = li_texts_raw[li_keep]
@@ -587,7 +665,7 @@ def extract_columnar(
     li_text = li_text_s.to_numpy()
 
     seg_line, seg_s, seg_e, seg_t, n_segs, indent = _segment_scan(
-        li_text, gap_min_spaces
+        li_text, opts.gap_min_spaces
     )
     has_rrid, is_header, sect_ok = _line_features(li_doc, li_text_s)
     region_id = _in_table_pass(
@@ -633,26 +711,14 @@ def extract_columnar(
                 md_off[m0:m1],
                 md_ref[m0:m1],
                 out,
-                merge_rows=merge_rows,
-                excepted_pages=excepted_pages,
-                row_model=row_model,
-                with_extents=with_extents,
-                midcol_rowspans=midcol_rowspans,
+                opts,
             )
         except Exception:  # per-doc isolation (reference stores err_msg)
             n_errors += 1
-            out["doc_id"].append(str(doc_ids[d]))
-            out["kind"].append(_KIND_ERROR)
-            out["text"].append(traceback.format_exc()[-500:])
-            out["media_ref"].append("")
-            out["offset"].append(-1)
-            out["table"].append(-1)
-            out["row"].append(-1)
-            out["col"].append(-1)
-            out["fullspan"].append(False)
-            if with_extents:
-                out["cfirst"].append(-1)
-                out["clast"].append(-1)
+            _append_meta_row(
+                out, str(doc_ids[d]), _KIND_ERROR,
+                traceback.format_exc()[-500:],
+            )
 
     # per-batch lineage/metrics row (aggregated into the checkpoint table by
     # job.run_extraction — replaces the reference's Postgres job metrics)
@@ -673,18 +739,9 @@ def extract_columnar(
             "doc_id_max": str(max(doc_ids)),
             "partition_id": int(partition_id),
         }
-        out["doc_id"].append("__stats__")
-        out["kind"].append("stats")
-        out["text"].append(json.dumps(stats, sort_keys=True))
-        out["media_ref"].append("")
-        out["offset"].append(-1)
-        out["table"].append(-1)
-        out["row"].append(-1)
-        out["col"].append(-1)
-        out["fullspan"].append(False)
-        if with_extents:
-            out["cfirst"].append(-1)
-            out["clast"].append(-1)
+        _append_meta_row(
+            out, "__stats__", "stats", json.dumps(stats, sort_keys=True)
+        )
 
     # seq: 0-based per doc in emission order (docs are emitted contiguously),
     # computed from run lengths — no pandas groupby on the hot path
@@ -703,65 +760,15 @@ def extract_columnar(
     return out
 
 
-def _columns_to_pandas(out: dict) -> pd.DataFrame:
-    return pd.DataFrame({c: out[c] for c in OUTPUT_COLUMNS})
-
-
-def _batch_to_columnar(pdf: pd.DataFrame):
-    n = len(pdf)
-    doc_ids = pdf["doc_id"].to_numpy()
-    span_lists = [
-        s if isinstance(s, (list, np.ndarray)) else []
-        for s in pdf["spans"].tolist()
-    ]
-    lens = np.array([len(s) for s in span_lists], dtype=np.int64)
-    span_doc = np.repeat(np.arange(n), lens)
-    flat = [sp for lst in span_lists for sp in lst]
-    kinds = np.array([s["kind"] for s in flat], dtype=object)
-    texts = np.array([s["text"] for s in flat], dtype=object)
-    media = np.array([s["media_ref"] for s in flat], dtype=object)
-    offs = np.array(
-        [s["offset"] if s["offset"] is not None else 0 for s in flat],
-        dtype=np.int64,
-    )
-    return doc_ids, span_doc, kinds, texts, media, offs
-
-
-def extract_pandas_batch(
-    pdf: pd.DataFrame,
-    merge_rows: bool = True,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
-    gap_min_spaces: int = spec.GAP_MIN_SPACES,
-) -> pd.DataFrame:
-    """Extraction over a ``(doc_id, spans)`` pandas batch (mapInPandas)."""
-    if len(pdf) == 0:
-        return pd.DataFrame(
-            {c: pd.Series(dtype="string" if c not in ("seq", "offset") else "int32")
-             for c in OUTPUT_COLUMNS}
-        )
-    return _columns_to_pandas(
-        extract_columnar(
-            *_batch_to_columnar(pdf),
-            merge_rows=merge_rows,
-            excepted_lines=excepted_lines,
-            excepted_pages=excepted_pages,
-            row_model=row_model,
-            gap_min_spaces=gap_min_spaces,
-        )
-    )
+def extract_pandas_batch(pdf: pd.DataFrame, **kw) -> pd.DataFrame:
+    """Flat extraction over a ``(doc_id, spans)`` pandas frame: the Arrow
+    adapter behind a pandas→Arrow conversion (tests, in-process replays).
+    ``kw`` are ``ExtractOptions`` fields."""
+    return _pandas_batch(pdf, ExtractOptions(**kw))
 
 
 def extract_nested_batch(
-    pdf: pd.DataFrame,
-    merge_rows: bool = True,
-    with_colspans: bool = False,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
-    gap_min_spaces: int = spec.GAP_MIN_SPACES,
-    midcol_rowspans: bool = False,
+    pdf: pd.DataFrame, with_colspans: bool = False, **kw
 ) -> pd.DataFrame:
     """One row per doc: the reference's result-JSON wrapper
     ``{"paper_id": ..., "result": {"pages": [{"page": N, "tables":
@@ -818,27 +825,17 @@ def extract_nested_batch(
     ingest expands rowspan occupancy (sources/gold_json.py) and the
     GriTS grids honor it (eval/grits_like.py), so both recovered and
     unrecoverable rowspans are compared fairly
-    (tests/test_colspan_rowspan.py)."""
-    if len(pdf) == 0:
-        return pd.DataFrame({"doc_id": pd.Series(dtype="string"),
-                             "result": pd.Series(dtype="string")})
-    out = extract_columnar(
-        *_batch_to_columnar(pdf),
-        merge_rows=merge_rows,
-        excepted_lines=excepted_lines,
-        excepted_pages=excepted_pages,
-        row_model=row_model,
-        gap_min_spaces=gap_min_spaces,
-        with_extents=with_colspans,
-        midcol_rowspans=midcol_rowspans,
-    )
-    return nested_from_columnar(out, with_colspans)
+    (tests/test_colspan_rowspan.py).
+
+    Like ``extract_pandas_batch``, a pandas wrapper over the Arrow adapter;
+    ``kw`` are the other ``ExtractOptions`` fields."""
+    mode = "nested-colspans" if with_colspans else "nested"
+    return _pandas_batch(pdf, ExtractOptions(output_mode=mode, **kw))
 
 
-def nested_from_columnar(out: dict, with_colspans: bool) -> pd.DataFrame:
-    """Fold ``extract_columnar`` output into the one-row-per-doc nested
-    result-JSON frame (the tail of ``extract_nested_batch``, split out so
-    the fused synth+extract path can reuse it on pre-built columns)."""
+def nested_from_columnar(out: dict, with_colspans: bool) -> pa.RecordBatch:
+    """The nested renderer: fold ``extract_columnar`` output into one
+    ``(doc_id, result)`` result-JSON row per doc."""
     docs: dict[str, dict] = {}
     fullspan: dict[tuple, bool] = {}
     extents: dict[tuple, tuple] = {}
@@ -860,8 +857,9 @@ def nested_from_columnar(out: dict, with_colspans: bool) -> pd.DataFrame:
                 rowspans.setdefault(key, {})[out["col"][i]] = (
                     out["rowspan"][i]
                 )
-    rows = []
-    for doc_id in sorted(docs):
+    doc_ids = sorted(docs)
+    results: list[str] = []
+    for doc_id in doc_ids:
         pages = []
         for t in sorted(docs[doc_id]):
             tbl = docs[doc_id][t]
@@ -884,8 +882,11 @@ def nested_from_columnar(out: dict, with_colspans: bool) -> pd.DataFrame:
                 _apply_rowspan_occupancy(grid)
             pages.append({"page": int(t) + 1, "tables": [{"rows": grid}]})
         result = {"paper_id": doc_id, "result": {"pages": pages}}
-        rows.append((doc_id, json.dumps(result, sort_keys=True)))
-    return pd.DataFrame(rows, columns=["doc_id", "result"])
+        results.append(json.dumps(result, sort_keys=True))
+    return pa.RecordBatch.from_arrays(
+        [pa.array(doc_ids, pa.string()), pa.array(results, pa.string())],
+        schema=NESTED_SCHEMA,
+    )
 
 
 def _apply_rowspan_occupancy(grid: list[list[dict]]) -> list[list[dict]]:
@@ -1005,109 +1006,115 @@ def _cells_with_colspans(
     return row_cells
 
 
-def make_map_in_pandas_fn(
-    merge_rows: bool = True,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
-    gap_min_spaces: int = spec.GAP_MIN_SPACES,
-):
-    """Iterator-style fn for ``DataFrame.mapInPandas`` (Arrow-batched)."""
+# --------------------------------------------------------------------------
+# the Arrow adapter: span source -> extract_columnar -> renderer
+# --------------------------------------------------------------------------
 
-    def fn(batches):
-        for pdf in batches:
-            yield extract_pandas_batch(
-                pdf,
-                merge_rows=merge_rows,
-                excepted_lines=excepted_lines,
-                excepted_pages=excepted_pages,
-                row_model=row_model,
-                gap_min_spaces=gap_min_spaces,
-            )
+SPAN_TYPE = pa.struct([
+    ("kind", pa.string()), ("text", pa.string()),
+    ("media_ref", pa.string()), ("offset", pa.int32()),
+])
+SPANS_SCHEMA = pa.schema(
+    [("doc_id", pa.string()), ("spans", pa.list_(SPAN_TYPE))]
+)
+FLAT_SCHEMA = pa.schema([
+    ("doc_id", pa.string()), ("seq", pa.int32()), ("kind", pa.string()),
+    ("text", pa.string()), ("media_ref", pa.string()), ("offset", pa.int32()),
+])
+NESTED_SCHEMA = pa.schema([("doc_id", pa.string()), ("result", pa.string())])
 
-    return fn
-
-
-def make_nested_map_in_pandas_fn(
-    merge_rows: bool = True,
-    with_colspans: bool = False,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
-    gap_min_spaces: int = spec.GAP_MIN_SPACES,
-    midcol_rowspans: bool = False,
-):
-    """mapInPandas fn emitting the nested result-JSON (one row per doc)."""
-
-    def fn(batches):
-        for pdf in batches:
-            yield extract_nested_batch(
-                pdf,
-                merge_rows=merge_rows,
-                with_colspans=with_colspans,
-                excepted_lines=excepted_lines,
-                excepted_pages=excepted_pages,
-                row_model=row_model,
-                gap_min_spaces=gap_min_spaces,
-                midcol_rowspans=midcol_rowspans,
-            )
-
-    return fn
+# doc key of the synth span source: int64 doc_id -> "sfdoc_<id>", generated
+# under synth's default seed
+SYNTH_DOC_KEY = "sfdoc_{}"
 
 
-def make_map_in_arrow_fn(
-    merge_rows: bool = True,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
-    gap_min_spaces: int = spec.GAP_MIN_SPACES,
-):
-    """Zero-copy-ish fn for ``DataFrame.mapInArrow`` — flattens the
-    list<struct> spans column columnar-side, no per-span Python dicts."""
-    import pyarrow as pa
+def _spans_from_column(rb: pa.RecordBatch):
+    """Span source over the ``list<struct>`` spans column, flattened
+    columnar-side — no per-span Python objects. A null spans list is an
+    empty doc; a null span element has null fields (so it is neither text
+    nor media); a null offset counts as 0."""
+    doc_ids = rb.column("doc_id").to_numpy(zero_copy_only=False)
+    la = rb.column("spans")
+    offs = la.offsets.to_numpy()
+    span_doc = np.repeat(np.arange(len(doc_ids)), offs[1:] - offs[:-1])
+    # slice the child array by the offset window: a sliced ListArray
+    # (nonzero offs[0]) keeps the FULL child in .values — indexing it
+    # directly would misalign span_doc with the value arrays. flatten()
+    # folds a null struct's validity into each field.
+    vals = la.values.slice(int(offs[0]), int(offs[-1] - offs[0]))
+    field = dict(zip((f.name for f in vals.type), vals.flatten()))
+    return (
+        doc_ids,
+        span_doc,
+        *(
+            field[c].to_numpy(zero_copy_only=False)
+            for c in ("kind", "text", "media_ref")
+        ),
+        pc.fill_null(field["offset"], 0).to_numpy().astype(np.int64),
+    )
+
+
+def _spans_from_synth(rb: pa.RecordBatch):
+    """Span source keyed by an int64 ``doc_id`` column: each doc's spans
+    are generated inside the task (``synth.generate_doc``, keyed by doc id
+    only), so only the 8-byte ids cross an exchange, never the span
+    payload, and the output equals extracting a materialized spans table
+    of the same docs."""
+    keys = [SYNTH_DOC_KEY.format(i) for i in rb.column("doc_id").to_pylist()]
+    docs = [synth.generate_doc(k) for k in keys]
+    lens = np.array([len(d) for d in docs], dtype=np.int64)
+    flat = [span for doc in docs for span in doc]
+    kinds, texts, media, offs = zip(*flat) if flat else ((), (), (), ())
+    return (
+        np.array(keys, dtype=object),
+        np.repeat(np.arange(len(keys)), lens),
+        *(np.array(c, dtype=object) for c in (kinds, texts, media)),
+        np.array(offs, dtype=np.int64),
+    )
+
+
+def _flat_from_columnar(out: dict) -> pa.RecordBatch:
+    """The flat renderer: Arrow arrays straight from the columns."""
+    return pa.RecordBatch.from_arrays(
+        [pa.array(out[f.name], f.type) for f in FLAT_SCHEMA],
+        schema=FLAT_SCHEMA,
+    )
+
+
+def _extract_arrow_batch(
+    rb: pa.RecordBatch, opts: ExtractOptions = DEFAULT_OPTIONS
+) -> pa.RecordBatch:
+    """One Arrow batch in, one Arrow batch out: the batch's span source
+    (a ``spans`` column, else synth keyed by an int64 ``doc_id``) through
+    ``extract_columnar`` into the renderer ``opts.output_mode`` picks."""
+    if "spans" in rb.schema.names:
+        cols = _spans_from_column(rb)
+    elif rb.schema.field("doc_id").type == pa.int64():
+        cols = _spans_from_synth(rb)
+    else:
+        raise ValueError(
+            "extraction input needs a spans column or an int64 doc_id "
+            f"column, got {rb.schema}"
+        )
+    out = extract_columnar(*cols, opts)
+    if opts.output_mode == "spans":
+        return _flat_from_columnar(out)
+    return nested_from_columnar(out, opts.with_extents)
+
+
+def make_map_in_arrow_fn(opts: ExtractOptions = DEFAULT_OPTIONS):
+    """The extraction adapter: iterator fn for ``DataFrame.mapInArrow``."""
 
     def fn(batches):
         for rb in batches:
-            tbl = pa.table(rb)
-            doc_ids = tbl.column("doc_id").to_numpy(zero_copy_only=False)
-            spans = tbl.column("spans").combine_chunks()
-            if isinstance(spans, pa.ChunkedArray):
-                spans = spans.combine_chunks()
-            la = spans if isinstance(spans, pa.ListArray) else spans.chunk(0)
-            offs = la.offsets.to_numpy(zero_copy_only=False)
-            lens = offs[1:] - offs[:-1]
-            span_doc = np.repeat(np.arange(len(doc_ids)), lens)
-            # slice the child array by the offset window: a sliced ListArray
-            # (nonzero offs[0]) keeps the FULL child in .values — indexing it
-            # directly would misalign span_doc with the value arrays
-            vals = la.values.slice(int(offs[0]), int(offs[-1] - offs[0]))
-            kinds = vals.field("kind").to_numpy(zero_copy_only=False)
-            texts = vals.field("text").to_numpy(zero_copy_only=False)
-            media = vals.field("media_ref").to_numpy(zero_copy_only=False)
-            offsets = vals.field("offset").to_numpy(zero_copy_only=False)
-            out = extract_columnar(
-                doc_ids, span_doc,
-                np.asarray(kinds, dtype=object),
-                np.asarray(texts, dtype=object),
-                np.asarray(media, dtype=object),
-                np.asarray(offsets, dtype=np.int64),
-                merge_rows=merge_rows,
-                excepted_lines=excepted_lines,
-                excepted_pages=excepted_pages,
-                row_model=row_model,
-                gap_min_spaces=gap_min_spaces,
-            )
-            # build arrow arrays directly — no pandas on the output path
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out["doc_id"], type=pa.string()),
-                    pa.array(out["seq"], type=pa.int32()),
-                    pa.array(out["kind"], type=pa.string()),
-                    pa.array(out["text"], type=pa.string()),
-                    pa.array(out["media_ref"], type=pa.string()),
-                    pa.array(out["offset"], type=pa.int32()),
-                ],
-                names=OUTPUT_COLUMNS,
-            )
+            yield _extract_arrow_batch(rb, opts)
 
     return fn
+
+
+def _pandas_batch(pdf: pd.DataFrame, opts: ExtractOptions) -> pd.DataFrame:
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(pdf[f.name].tolist(), f.type) for f in SPANS_SCHEMA],
+        schema=SPANS_SCHEMA,
+    )
+    return _extract_arrow_batch(rb, opts).to_pandas()

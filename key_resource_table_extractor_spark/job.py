@@ -26,11 +26,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import synth
-from .extractor.pipeline import make_map_in_arrow_fn, make_map_in_pandas_fn
+from .extractor.pipeline import ExtractOptions, make_map_in_arrow_fn
 from .schemas import DOCUMENT_SPANS_SCHEMA, EXTRACTED_SPANS_DDL
 
+NESTED_DDL = "doc_id string, result string"
+
 STATS_KIND = "stats"
-ERROR_KIND = "error"
 DATA_KINDS = ("text", "media")
 
 
@@ -74,86 +75,6 @@ def synthesize_spans(
     )
 
 
-def make_synth_extract_fn(
-    seed: int = 42,
-    key_format: str = "sfdoc_{}",
-    nested: bool = False,
-    with_colspans: bool = False,
-    merge_rows: bool = True,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
-    gap_min_spaces: int | None = None,
-    midcol_rowspans: bool = False,
-):
-    """Fused synth+extract ``mapInPandas`` fn over a bare ``doc_id`` frame.
-
-    The un-fused shape (generate spans → Arrow → exchange → Arrow →
-    extract) pays for the span payload three times: pandas→Arrow struct
-    serialization out of the generator, a full shuffle of the generated
-    text, and Arrow→numpy back into the extractor. Fusing keeps the spans
-    as plain Python tuples inside ONE task (guide §8: shuffle the 8-byte
-    doc ids, never the payload) — the only rows that ever cross Arrow are
-    the extraction OUTPUT rows. Byte-identical results: generation is
-    keyed by doc_id only and extraction is a pure per-doc function
-    (pinned by tests/test_modes_and_nested.py fused-equality tests).
-    """
-    import numpy as np
-
-    from . import spec
-    from .extractor.pipeline import (
-        _columns_to_pandas,
-        extract_columnar,
-        nested_from_columnar,
-    )
-
-    gap = spec.GAP_MIN_SPACES if gap_min_spaces is None else gap_min_spaces
-    kw = dict(
-        merge_rows=merge_rows,
-        excepted_lines=excepted_lines,
-        excepted_pages=excepted_pages,
-        row_model=row_model,
-        gap_min_spaces=gap,
-    )
-    if nested:
-        kw.update(with_extents=with_colspans, midcol_rowspans=midcol_rowspans)
-
-    def fn(batches):
-        import pandas as pd
-
-        gen = synth.generate_doc
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keys = [key_format.format(i) for i in pdf["doc_id"].tolist()]
-            lens = np.empty(len(keys), dtype=np.int64)
-            flat: list[tuple] = []
-            for j, k in enumerate(keys):
-                sp = gen(k, seed)
-                lens[j] = len(sp)
-                flat.extend(sp)
-            span_doc = np.repeat(np.arange(len(keys)), lens)
-            if flat:
-                kinds, texts, media, offs = zip(*flat)
-            else:
-                kinds = texts = media = offs = ()
-            out = extract_columnar(
-                np.array(keys, dtype=object),
-                span_doc,
-                np.array(kinds, dtype=object),
-                np.array(texts, dtype=object),
-                np.array(media, dtype=object),
-                np.array(offs, dtype=np.int64),
-                **kw,
-            )
-            if nested:
-                yield nested_from_columnar(out, with_colspans)
-            else:
-                yield _columns_to_pandas(out)
-
-    return fn
-
-
 # --------------------------------------------------------------------------
 # partitioning / skew
 # --------------------------------------------------------------------------
@@ -172,184 +93,30 @@ def salted_repartition(df: DataFrame, num_partitions: int, salt: int = 0) -> Dat
     return df.repartition(num_partitions, key)
 
 
-def size_balanced_repartition(
-    df: DataFrame,
-    num_partitions: int,
-    heavy_quantile: float = 0.99,
-    salt: int = 0,
-    exact_per_partition: int = 4,
-) -> DataFrame:
-    """Skew-aware repartition: round-robin the heaviest docs, hash the rest.
-
-    Three bands by span count:
-
-    - SUPER-HEAVY — docs STRICTLY above the ``1 - cap/n`` approx-quantile
-      (``cap = exact_per_partition * num_partitions``): placed round-robin
-      by descending size, so the k uniquely-heaviest docs land on k distinct
-      partitions. Strictly-above bounds the exact-placement window to ~cap
-      rows by the quantile definition even under heavy ties — never a global
-      sort of the whole heavy tail through one task.
-    - HEAVY (above ``heavy_quantile`` up to the super-heavy cut, including
-      any tie mass AT the cut): salted hash with a DIFFERENT salt than the
-      light band — equal-sized docs gain nothing from exact round-robin, a
-      hash spread balances them in expectation without any sort.
-    - LIGHT — salted hash.
-
-    Output is byte-identical to any other partitioning (extraction is
-    per-doc pure) — pinned by the determinism test.
-    """
-    from pyspark.sql import Window
-
-    sized = df.withColumn("__sz", F.size("spans"))
-    agg = sized.agg(
-        F.expr(f"approx_percentile(__sz, {heavy_quantile})").alias("t"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    thr = int(agg["t"] or 0)
-    n_rows = int(agg["n"] or 0)
-    cap = max(exact_per_partition * num_partitions, 1)
-    # second threshold: quantile with at most ~cap rows STRICTLY above it
-    q2 = max(heavy_quantile, 1.0 - cap / n_rows) if n_rows else heavy_quantile
-    thr2 = thr
-    if q2 > heavy_quantile:
-        thr2_row = sized.agg(
-            F.expr(f"approx_percentile(__sz, {q2})").alias("t")
-        ).collect()[0]
-        thr2 = max(int(thr2_row["t"] or 0), thr)
-    super_heavy = sized.where(F.col("__sz") > F.lit(thr2))
-    mid = sized.where(
-        (F.col("__sz") >= F.lit(thr)) & (F.col("__sz") <= F.lit(thr2))
-    )
-    light = sized.where(F.col("__sz") < F.lit(thr))
-    w = Window.orderBy(F.desc("__sz"), F.asc("doc_id"))
-    super_p = super_heavy.withColumn(
-        "__p",
-        F.pmod(F.row_number().over(w) - 1, F.lit(num_partitions)).cast("int"),
-    )
-
-    def _hash_p(frame, s):
-        return frame.withColumn(
-            "__p",
-            F.pmod(
-                F.xxhash64(F.col("doc_id"), F.lit(s)), F.lit(num_partitions)
-            ).cast("int"),
-        )
-
-    return (
-        super_p.unionByName(_hash_p(mid, salt + 1))
-        .unionByName(_hash_p(light, salt))
-        .repartition(num_partitions, F.col("__p"))
-        .drop("__sz", "__p")
-    )
-
-
 # --------------------------------------------------------------------------
 # extract
 # --------------------------------------------------------------------------
 
 def extract(
-    df: DataFrame,
-    use_arrow: bool = True,
-    merge_rows: bool = True,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
-    gap_min_spaces: int | None = None,
+    df: DataFrame, opts: ExtractOptions | None = None, **kw
 ) -> DataFrame:
-    """spans table → extracted span rows (+ per-batch stats rows).
-
-    ``merge_rows`` is the reference's use_row_info switch analog;
-    ``row_model`` ("votes" | "anchor" | "none") picks the merge mechanism
-    explicitly — "anchor" is the detected-row J4 analog
-    (PDFTableExtractor2.java:334-380);
-    ``excepted_lines``/``excepted_pages`` drop text lines / detected
-    regions by per-doc index, negative = from the end (the reference's
-    excepted lines/pages config, PDFTableExtractor2.java:93-128)."""
-    from . import spec
-
-    kw = dict(
-        merge_rows=merge_rows,
-        excepted_lines=excepted_lines,
-        excepted_pages=excepted_pages,
-        row_model=row_model,
-        gap_min_spaces=(
-            spec.GAP_MIN_SPACES if gap_min_spaces is None else gap_min_spaces
-        ),
-    )
-    if use_arrow:
-        return df.mapInArrow(make_map_in_arrow_fn(**kw), EXTRACTED_SPANS_DDL)
-    return df.mapInPandas(make_map_in_pandas_fn(**kw), EXTRACTED_SPANS_DDL)
+    """Extraction in ONE ``mapInArrow`` stage over a spans table — or over
+    a bare int64 ``doc_id`` frame, whose spans are synthesized inside the
+    task (the entry queries). ``opts`` (or ``ExtractOptions`` fields as
+    keywords) sets the options and the output: flat span rows plus
+    per-batch ``kind='stats'`` rows, or one result-JSON row per doc."""
+    opts = ExtractOptions.of(opts, **kw)
+    ddl = EXTRACTED_SPANS_DDL if opts.output_mode == "spans" else NESTED_DDL
+    return df.mapInArrow(make_map_in_arrow_fn(opts), ddl)
 
 
-def extract_grouped(
-    df: DataFrame,
-    merge_rows: bool = True,
-    row_model: str | None = None,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    gap_min_spaces: int | None = None,
-) -> DataFrame:
-    """Alternative execution shape: ``groupBy(doc_id).applyInPandas``.
-
-    Semantically identical to ``extract`` (equality-tested); useful when
-    the input has been exploded to finer granularity upstream and Spark
-    must guarantee doc-grouping itself. Costs a shuffle on doc_id — the
-    one-row-per-doc ``mapInArrow`` path is the default for that reason.
-    """
-    from .extractor.pipeline import extract_pandas_batch
-
-    from . import spec
-
-    def fn(pdf):
-        out = extract_pandas_batch(
-            pdf,
-            merge_rows=merge_rows,
-            row_model=row_model,
-            excepted_lines=excepted_lines,
-            excepted_pages=excepted_pages,
-            gap_min_spaces=(
-                spec.GAP_MIN_SPACES if gap_min_spaces is None
-                else gap_min_spaces
-            ),
-        )
-        return out[out["kind"].isin(DATA_KINDS)]
-
-    return df.groupBy("doc_id").applyInPandas(fn, EXTRACTED_SPANS_DDL)
-
-
-def extract_nested(
-    df: DataFrame,
-    merge_rows: bool = True,
-    with_colspans: bool = False,
-    row_model: str | None = None,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    gap_min_spaces: int | None = None,
-    midcol_rowspans: bool = False,
-) -> DataFrame:
-    """spans table → one row per doc with the reference's result-JSON
-    wrapper (S7 sink parity; FIXTURES.md §4). ``with_colspans`` switches
-    cells to the gold-JSON ``{"content", "colspan"}`` shape.
-    ``midcol_rowspans`` opts into non-col-0 rowspan recovery (see
-    ``extract_nested_batch`` for the sparse-column trade-off)."""
-    from . import spec
-    from .extractor.pipeline import make_nested_map_in_pandas_fn
-
-    return df.mapInPandas(
-        make_nested_map_in_pandas_fn(
-            merge_rows=merge_rows,
-            with_colspans=with_colspans,
-            row_model=row_model,
-            excepted_lines=excepted_lines,
-            excepted_pages=excepted_pages,
-            gap_min_spaces=(
-                spec.GAP_MIN_SPACES if gap_min_spaces is None
-                else gap_min_spaces
-            ),
-            midcol_rowspans=midcol_rowspans,
-        ),
-        "doc_id string, result string",
-    )
+def extract_nested(df: DataFrame, with_colspans=False, **kw) -> DataFrame:
+    """``extract`` in a nested mode: one row per doc with the reference's
+    result-JSON wrapper (S7 sink parity; FIXTURES.md §4).
+    ``with_colspans`` selects the gold-JSON ``{"content", "colspan"}``
+    cell shape (output_mode="nested-colspans")."""
+    mode = "nested-colspans" if with_colspans else "nested"
+    return extract(df, output_mode=mode, **kw)
 
 
 def data_spans(out: DataFrame) -> DataFrame:
@@ -403,16 +170,11 @@ def run_extraction(
     n_buckets: int = 8,
     partitions_per_bucket: int | None = None,
     salt: int = 0,
-    use_arrow: bool = True,
     fail_after_bucket: int | None = None,
     buckets: list[int] | None = None,
-    excepted_lines: list[int] | None = None,
-    excepted_pages: list[int] | None = None,
-    row_model: str | None = None,
-    gap_min_spaces: int | None = None,
-    output_mode: str = "spans",
     adopt_k: bool = False,
-    midcol_rowspans: bool = False,
+    opts: ExtractOptions | None = None,
+    **extract_kw,
 ) -> dict:
     """Run (or resume) the extraction over ``input_df``.
 
@@ -421,8 +183,10 @@ def run_extraction(
     checkpoint row is appended. A killed run re-invoked with the same
     ``run_id`` skips completed buckets.
 
-    ``output_mode``: "spans" (default) writes the flat span table;
-    "nested" / "nested-colspans" write the S7 result-JSON table (one
+    ``opts`` — or ``ExtractOptions`` fields as keywords, validated before
+    any write — sets the extraction. Its ``output_mode`` "spans" (default)
+    writes the flat span table; "nested" / "nested-colspans" write the S7
+    result-JSON table (one
     (doc_id, result) row per doc) under the SAME bucket checkpoint
     discipline — a 10^9-doc nested export is resumable exactly like the
     flat one. Nested buckets carry no per-batch stats rows, so their
@@ -448,6 +212,7 @@ def run_extraction(
     """
     from pyspark.sql import Observation
 
+    opts = ExtractOptions.of(opts, **extract_kw)
     run_id = run_id or uuid.uuid4().hex[:12]
     partitions_per_bucket = (
         partitions_per_bucket or spark.sparkContext.defaultParallelism
@@ -478,15 +243,8 @@ def run_extraction(
         bdf = bucketed.filter(F.col("__bucket") == b).drop("__bucket")
         bdf = salted_repartition(bdf, partitions_per_bucket, salt)
         obs = Observation(f"krt_{run_id}_{b}_{uuid.uuid4().hex[:6]}")
-        if output_mode == "spans":
-            out = extract(
-                bdf,
-                use_arrow=use_arrow,
-                excepted_lines=excepted_lines,
-                excepted_pages=excepted_pages,
-                row_model=row_model,
-                gap_min_spaces=gap_min_spaces,
-            )
+        out = extract(bdf, opts)
+        if opts.output_mode == "spans":
             out = out.observe(
                 obs,
                 F.sum(_stat("n_docs").cast("long")).alias("n_docs"),
@@ -500,15 +258,6 @@ def run_extraction(
                 ).alias("n_spans_out"),
             )
         else:
-            out = extract_nested(
-                bdf,
-                with_colspans=(output_mode == "nested-colspans"),
-                row_model=row_model,
-                excepted_lines=excepted_lines,
-                excepted_pages=excepted_pages,
-                gap_min_spaces=gap_min_spaces,
-                midcol_rowspans=midcol_rowspans,
-            )
             out = out.observe(
                 obs,
                 F.count(F.lit(1)).alias("n_docs"),
@@ -826,64 +575,6 @@ def output_status(spark: SparkSession, output_path: str) -> dict:
     }
 
 
-def compact_bucket(
-    spark: SparkSession,
-    output_path: str,
-    bucket: int,
-    target_bytes: int = 256 << 20,
-) -> dict:
-    """Rewrite one committed bucket directory into ~``target_bytes``
-    parquet files (the standard small-files compaction a bucketed,
-    many-executor writer needs at warehouse scale: K buckets × P
-    partitions per run leaves K·P files; downstream scans want
-    128-512 MB objects). The rewrite is idempotent and bucket-local —
-    it can run concurrently with other buckets' compactions and never
-    touches the checkpoint table (compaction is not a lineage event).
-
-    Swap discipline (shared with ``delete_docs``/``upsert_docs``): the
-    rewritten copy is staged under the sibling ``.staging`` root, the
-    live directory is retired to a backup there, the staged copy is
-    renamed in, and only then is the backup dropped — every rename
-    checked, and a crash between retire and commit is healed by the
-    ``_recover_bucket`` restore on the next run."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    bucket_dir = f"{output_path}/bucket={bucket}"
-    path = jvm.org.apache.hadoop.fs.Path(bucket_dir)
-    fs = path.getFileSystem(conf)
-    _recover_bucket(fs, jvm, output_path, bucket)
-    if not fs.exists(path):
-        raise FileNotFoundError(bucket_dir)
-
-    # size from the parquet files themselves — getContentSummary would
-    # also count checksum/marker siblings and overstate the target split
-    n_before, total = _parquet_dir_stats(fs, path)
-    if n_before == 0:
-        # a fully-deleted bucket is a LEGAL empty directory (the batched
-        # delete/upsert swap in bare dirs); nothing to compact, and a
-        # schema-less read would raise UNABLE_TO_INFER_SCHEMA
-        return {
-            "bucket": bucket, "bytes": 0,
-            "files_before": 0, "files_after": 0,
-        }
-    n_files = max(1, -(-total // target_bytes))
-    df = spark.read.parquet(bucket_dir)
-    staging = jvm.org.apache.hadoop.fs.Path(
-        f"{output_path}.staging/bucket={bucket}.compacting"
-    )
-    df.repartition(n_files).write.mode("overwrite").parquet(str(staging))
-    _swap_bucket_dir(fs, jvm, output_path, bucket, staging)
-    # recount post-swap: repartition(n) emits FEWER files than n when the
-    # bucket has fewer rows, so the computed target is not the truth
-    n_after, _ = _parquet_dir_stats(fs, path)
-    return {
-        "bucket": bucket,
-        "bytes": total,
-        "files_before": n_before,
-        "files_after": n_after,
-    }
-
-
 def compact_output(
     spark: SparkSession,
     output_path: str,
@@ -892,7 +583,13 @@ def compact_output(
     dry_run: bool = False,
 ) -> list[dict] | dict:
     """Compact every (or the given) bucket directory under
-    ``output_path``. Buckets are independent — an orchestrator can shard
+    ``output_path`` into ~``target_bytes`` parquet files (K buckets × P
+    partitions per run leave K·P small files; downstream scans want
+    128-512 MB objects). Compaction is not a lineage event: the
+    checkpoint table is untouched. Each bucket commits through the
+    checked ``_swap_bucket_dir``, and a crash between its retire and
+    commit is healed by ``_recover_bucket`` on the next run.
+    Buckets are independent — an orchestrator can shard
     this loop exactly like the extraction buckets themselves (and a
     sharded driver MUST pass its own subset: compacting a bucket another
     driver is still writing would swap in a stale snapshot).
@@ -915,7 +612,7 @@ def compact_output(
     fs = root.getFileSystem(conf)
     if buckets is None:
         # include buckets currently retired by an interrupted swap (only
-        # their .staging backup exists) — compact_bucket's recovery
+        # their .staging backup exists) — the real run's recovery
         # restores them, so the natural retry must enumerate them
         buckets = set(_bucket_ids(fs, root))
         staging_root = jvm.org.apache.hadoop.fs.Path(f"{output_path}.staging")
@@ -938,7 +635,7 @@ def compact_output(
                 n, total = live_st.get(ln, (0, 0))
             elif bn in bk_dirs:
                 n, total = bk_st.get(bn, (0, 0))
-            else:  # mirror compact_bucket on an explicit miss
+            else:  # mirror the real run on an explicit miss
                 raise FileNotFoundError(f"{output_path}/bucket={b}")
             per.append({
                 "bucket": b,
@@ -1054,7 +751,7 @@ def delete_docs(
     ``bucket`` cover every affected directory, so the Spark-job count is
     constant in the number of buckets touched (a 10^7-id policy sweep at
     K=4096 runs 2 jobs, not ~4096). Each bucket still commits through
-    the checked retire/commit swap of ``compact_bucket`` — now a pure
+    the checked retire/commit swap of ``_swap_bucket_dir`` — now a pure
     metadata rename per bucket; untouched buckets (including
     hash-affected ones holding none of the ids) keep their files
     byte-identical.
@@ -1220,10 +917,9 @@ def upsert_docs(
     spark: SparkSession,
     input_df: DataFrame,
     output_path: str,
-    use_arrow: bool = True,
-    output_mode: str = "spans",
     n_buckets: int | None = None,
     dry_run: bool = False,
+    opts: ExtractOptions | None = None,
     **extract_kw,
 ) -> dict:
     """Re-extract the documents present in ``input_df`` (a spans table of
@@ -1237,15 +933,15 @@ def upsert_docs(
     merged write stages every affected bucket's (old rows minus upserted
     doc_ids) ∪ (its staged new rows) — the Spark-job count is constant
     in the number of buckets touched, with each bucket still committing
-    through the checked retire/commit swap of ``compact_bucket`` as a
+    through the checked retire/commit swap of ``_swap_bucket_dir`` as a
     metadata-only rename. The replace set is derived from ``input_df``, NOT
     from the extraction output — a changed doc whose new content yields
     zero rows (no tables detected) still has its stale rows removed.
     Buckets holding none of the upserted docs keep their files
     byte-identical; a doc new to the corpus lands in its hash bucket even
-    if that directory did not exist yet. ``extract_kw`` forwards the
-    extraction options (``row_model``, ``excepted_*``, ``gap_min_spaces``)
-    so the replacement rows follow the same config as the original run.
+    if that directory did not exist yet. ``opts`` — or ``ExtractOptions``
+    fields as keywords, ``output_mode`` included — must match the original
+    run's so the replacement rows follow the same config.
 
     Like compaction, an upsert is not a lineage event: the checkpoint
     table is untouched and only ``kind in DATA_KINDS`` rows are written
@@ -1266,6 +962,7 @@ def upsert_docs(
     """
     from pyspark.sql.types import IntegerType, StructField, StructType
 
+    opts = ExtractOptions.of(opts, **extract_kw)
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     root = jvm.org.apache.hadoop.fs.Path(output_path)
@@ -1341,16 +1038,9 @@ def upsert_docs(
             }
         finally:
             ids.unpersist()
-    if output_mode == "spans":
-        new_rows = data_spans(extract(input_df, use_arrow=use_arrow, **extract_kw))
-    elif output_mode in ("nested", "nested-colspans"):
-        new_rows = extract_nested(
-            input_df,
-            with_colspans=(output_mode == "nested-colspans"),
-            **extract_kw,
-        )
-    else:
-        raise ValueError(f"unknown output_mode: {output_mode}")
+    new_rows = extract(input_df, opts)
+    if opts.output_mode == "spans":
+        new_rows = data_spans(new_rows)
     stage_root = f"{output_path}.staging/upsert_rows"
     stage_path = jvm.org.apache.hadoop.fs.Path(stage_root)
     (

@@ -743,16 +743,6 @@ def derived_pq_params(n: int) -> tuple[int, int]:
     return ksub, shortlist
 
 
-def _l2sq(a, b):
-    return F.aggregate(
-        F.zip_with(
-            a, b, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def pq_codebooks(emb: DataFrame, dim: int, m: int = PQ_M,
                  ksub: int = PQ_KSUB) -> list:
     """Deterministic per-subspace codebooks: the sub-vectors of the ksub

@@ -101,6 +101,18 @@ def main(argv=None):
     from key_resource_table_extractor_spark import job
     from key_resource_table_extractor_spark.session import build_session
 
+    if args.cmd == "upsert":
+        try:
+            opts = job.ExtractOptions(
+                excepted_lines=_ints(args.excepted_lines),
+                excepted_pages=_ints(args.excepted_pages),
+                row_model=args.row_model,
+                gap_min_spaces=args.gap_min_spaces,
+                output_mode=args.output_mode,
+                midcol_rowspans=args.midcol_rowspans,
+            )
+        except ValueError as e:
+            p.error(str(e))
     spark = build_session(app_name="krt-maintain", master=args.master)
     try:
         if args.cmd == "status":
@@ -137,26 +149,13 @@ def main(argv=None):
                 dry_run=args.dry_run,
             )
         else:
-            if args.midcol_rowspans and args.output_mode != "nested-colspans":
-                p.error("--midcol-rowspans requires "
-                        "--output-mode nested-colspans")
             summary = {"cmd": "upsert"} | job.upsert_docs(
                 spark,
                 job.read_spans(spark, args.input),
                 args.out,
-                output_mode=args.output_mode,
                 n_buckets=args.n_buckets,
                 dry_run=args.dry_run,
-                row_model=args.row_model,
-                gap_min_spaces=args.gap_min_spaces,
-                excepted_lines=_ints(args.excepted_lines),
-                excepted_pages=_ints(args.excepted_pages),
-                # only the colspan-aware nested path knows the flag; the
-                # flat extractor would reject the kwarg
-                **(
-                    {"midcol_rowspans": True}
-                    if args.midcol_rowspans else {}
-                ),
+                opts=opts,
             )
         print(json.dumps(summary))
         return 0

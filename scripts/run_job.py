@@ -94,11 +94,19 @@ def main(argv=None):
     from key_resource_table_extractor_spark import job
     from key_resource_table_extractor_spark.session import build_session
 
+    try:
+        opts = job.ExtractOptions(
+            excepted_lines=_ints(args.excepted_lines),
+            excepted_pages=_ints(args.excepted_pages),
+            row_model=args.row_model,
+            gap_min_spaces=args.gap_min_spaces,
+            output_mode=args.output_mode,
+            midcol_rowspans=args.midcol_rowspans,
+        )
+    except ValueError as e:
+        p.error(str(e))
     spark = build_session(app_name="krt-run", master=args.master)
     try:
-        if args.midcol_rowspans and args.output_mode != "nested-colspans":
-            p.error("--midcol-rowspans requires "
-                    "--output-mode nested-colspans")
         if args.input:
             inp = job.read_spans(spark, args.input)
         elif args.n_docs:
@@ -114,13 +122,8 @@ def main(argv=None):
             n_buckets=args.buckets, partitions_per_bucket=args.partitions,
             salt=args.salt, fail_after_bucket=args.fail_after_bucket,
             buckets=_ints(args.bucket_subset),
-            excepted_lines=_ints(args.excepted_lines),
-            excepted_pages=_ints(args.excepted_pages),
-            row_model=args.row_model,
-            gap_min_spaces=args.gap_min_spaces,
-            output_mode=args.output_mode,
             adopt_k=args.adopt_k,
-            midcol_rowspans=args.midcol_rowspans,
+            opts=opts,
         )
         wall = time.time() - t0
         if args.compact_target_mb:

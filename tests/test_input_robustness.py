@@ -3,10 +3,16 @@ batches — the batch must not fail and well-formed docs must be unaffected."""
 
 from __future__ import annotations
 
-import pandas as pd
+import json
+import warnings
 
+import pandas as pd
+import pyarrow as pa
+
+from key_resource_table_extractor_spark import oracle
 from key_resource_table_extractor_spark.extractor.pipeline import (
     extract_pandas_batch,
+    make_map_in_arrow_fn,
 )
 
 GOOD = [
@@ -18,30 +24,67 @@ GOOD = [
 ]
 
 
-def test_null_spans_and_fields_do_not_poison_batch():
-    pdf = pd.DataFrame(
-        {
-            "doc_id": ["good", "null_spans", "null_fields", "empty"],
-            "spans": [
-                GOOD,
-                None,
-                [
-                    {"kind": None, "text": None, "media_ref": None, "offset": None},
-                    {"kind": "media", "text": None, "media_ref": None, "offset": 1},
-                ],
-                [],
-            ],
-        }
-    )
-    out = extract_pandas_batch(pdf)
-    good = out[(out.doc_id == "good") & (out.kind == "text")]
-    assert len(good) > 0
-    assert (out["kind"] != "error").all()  # nothing crashed per-doc either
-    # stats row counts all four docs
-    import json
+SPAN_T = pa.struct(
+    [("kind", pa.string()), ("text", pa.string()),
+     ("media_ref", pa.string()), ("offset", pa.int32())]
+)
 
+
+def _arrow_extract(docs: dict) -> pd.DataFrame:
+    """One Arrow batch through the production mapInArrow adapter."""
+    batch = pa.RecordBatch.from_pydict({
+        "doc_id": list(docs),
+        "spans": pa.array(list(docs.values()), pa.list_(SPAN_T)),
+    })
+    (out,) = make_map_in_arrow_fn()([batch])
+    return out.to_pandas()
+
+
+def _data_rows(out, doc_id):
+    d = out[(out.doc_id == doc_id) & out.kind.isin(["text", "media"])]
+    return list(zip(d["kind"], d["text"], d["media_ref"], d["offset"]))
+
+
+def test_null_spans_and_fields_do_not_poison_batch():
+    anti_bar = {"kind": "text",
+                "text": "Anti-Bar              Sigma    RRID:AB_2",
+                "media_ref": "", "offset": None}
+    docs = {
+        "good": GOOD,
+        "null_spans": None,
+        "null_fields": [
+            {"kind": None, "text": None, "media_ref": None, "offset": None},
+            {"kind": "media", "text": None, "media_ref": None, "offset": 1},
+        ],
+        "empty": [],
+        # a null span element is skipped, the rest of its doc extracts
+        "null_element": [GOOD[0], None, GOOD[1], GOOD[2]],
+        # a null offset counts as 0: the row sorts right after the offset-0
+        # title (stable), not before it as a wrapped INT64_MIN would
+        "null_offset": GOOD + [anti_bar],
+    }
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # no NaN -> int64 cast warning
+        out = _arrow_extract(docs)
+    good = _data_rows(out, "good")
+    assert len(good) > 0
+    assert _data_rows(out, "null_element") == good
+    exp = [
+        (k, t, m, o)
+        for (_s, k, t, m, o) in oracle.extract_document(
+            [(s["kind"], s["text"], s["media_ref"], s["offset"] or 0)
+             for s in docs["null_offset"]]
+        )
+    ]
+    got = _data_rows(out, "null_offset")
+    assert got == exp
+    texts = [t for _k, t, _m, _o in got]
+    assert texts.index("Key Resources Table") < texts.index("Anti-Bar")
+    assert texts.index("Anti-Bar") < texts.index("REAGENT or RESOURCE")
+    assert (out["kind"] != "error").all()  # nothing crashed per-doc either
+    # stats row counts all six docs
     stats = json.loads(out[out.kind == "stats"].iloc[0]["text"])
-    assert stats["n_docs"] == 4
+    assert stats["n_docs"] == 6
     assert stats["n_errors"] == 0
 
 
@@ -57,24 +100,13 @@ def test_sliced_list_array_in_arrow_path():
     """A RecordBatch whose spans ListArray is a nonzero-offset slice must
     not misalign span_doc with the child value arrays (the child of a
     sliced ListArray still holds the FULL values buffer)."""
-    import pyarrow as pa
-
-    from key_resource_table_extractor_spark import oracle
-    from key_resource_table_extractor_spark.extractor.pipeline import (
-        make_map_in_arrow_fn,
-    )
-
-    span_t = pa.struct(
-        [("kind", pa.string()), ("text", pa.string()),
-         ("media_ref", pa.string()), ("offset", pa.int32())]
-    )
     decoy = [
         {"kind": "text", "text": "decoy line", "media_ref": "", "offset": 0}
     ]
     full = pa.table(
         {
             "doc_id": pa.array(["skip0", "skip1", "keep"]),
-            "spans": pa.array([decoy, decoy + decoy, GOOD], pa.list_(span_t)),
+            "spans": pa.array([decoy, decoy + decoy, GOOD], pa.list_(SPAN_T)),
         }
     )
     sliced = full.slice(2)  # ListArray with offset 2 — child keeps decoys
@@ -215,3 +247,37 @@ def test_round4_operators_tolerate_empty_and_foreign_inputs(spark):
         {"srcA": 1.0},
     )
     assert empty_curation.collect() == []
+
+
+def test_doc_error_keeps_other_docs_nested_colspans_output(monkeypatch):
+    """A per-doc error row must not shift the extent/rowspan columns of
+    the docs after it: the colspan renderer reads them by row position,
+    so a short column would hand later docs their neighbours' rowspans."""
+    from key_resource_table_extractor_spark import synth
+    from key_resource_table_extractor_spark.extractor import pipeline
+
+    docs = [f"doc_42_{i:07d}" for i in range(6)]
+    pdf = pd.DataFrame({
+        "doc_id": docs,
+        "spans": [
+            [dict(kind=k, text=t, media_ref=m, offset=o)
+             for k, t, m, o in synth.generate_doc(d)]
+            for d in docs
+        ],
+    })
+    kw = dict(with_colspans=True, row_model="anchor")
+    exp = pipeline.extract_nested_batch(pdf.iloc[1:], **kw)
+    union, calls = pipeline._column_union, []
+
+    def fail_first_doc(*a):  # docs run in order: call 1 is docs[0]
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("injected")
+        return union(*a)
+
+    monkeypatch.setattr(pipeline, "_column_union", fail_first_doc)
+    got = pipeline.extract_nested_batch(pdf, **kw)
+    assert len(exp) > 0 and got.equals(exp)
+    calls.clear()
+    flat = pipeline.extract_pandas_batch(pdf)
+    assert (flat.kind == "error").sum() == 1

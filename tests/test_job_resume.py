@@ -124,13 +124,6 @@ def test_mega_doc_skew_present_and_handled(spark):
     assert out.count() > 0
 
 
-def test_grouped_extraction_equals_map_path(spark):
-    inp = job.synthesize_spans(spark, 120, partitions=3)
-    a = sorted_pdf(job.extract_grouped(inp))
-    b = sorted_pdf(job.data_spans(job.extract(inp)))
-    assert a.equals(b)
-
-
 def test_read_output_prunes_bucket_partitions(spark, tmp_path):
     from key_resource_table_extractor_spark.plans.audit import explain_str
 
@@ -436,9 +429,11 @@ def test_compact_reports_actual_files_when_fewer_than_target(spark, tmp_path):
     from key_resource_table_extractor_spark import job
 
     out = str(tmp_path / "out")
-    spark.range(3).coalesce(1).write.parquet(f"{out}/bucket=0")
+    spark.range(3).selectExpr("id", "cast(id as string) as doc_id").coalesce(
+        1
+    ).write.parquet(f"{out}/bucket=0")
     # ~hundreds of bytes / 64 per file → target well above the 3 rows
-    stats = job.compact_bucket(spark, out, 0, target_bytes=64)
+    (stats,) = job.compact_output(spark, out, target_bytes=64)
     n_live = sum(
         1 for f in os.listdir(f"{out}/bucket=0") if f.endswith(".parquet")
     )

@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 
 import pandas as pd
+import pytest
 
 from key_resource_table_extractor_spark import oracle
 from key_resource_table_extractor_spark.extractor.pipeline import (
@@ -182,12 +183,14 @@ def test_nested_result_json_shape():
 
 
 def test_fused_synth_extract_equals_unfused_paths(spark):
-    """The round-8 fused synth+extract entry shape (shuffle bare doc ids,
-    generate AND extract in one mapInPandas stage) must be row-identical
-    to the prior generate → salted-repartition → extract shape, for every
-    entry mode (flat/anchor/nested/nested+colspans)."""
+    """The entry queries' synth span source (shuffle bare int64 doc ids,
+    generate AND extract in one mapInArrow stage) must be row-identical to
+    extracting a materialized ``sfdoc_<id>`` spans table of the same docs,
+    for every entry mode (flat/anchor/nested/nested+colspans)."""
     import os
     import sys
+
+    import pyarrow.parquet as pq
 
     sys.path.insert(
         0,
@@ -196,31 +199,37 @@ def test_fused_synth_extract_equals_unfused_paths(spark):
         ),
     )
     import __spark_entry__ as entry
-    from key_resource_table_extractor_spark import job
+    from key_resource_table_extractor_spark import job, synth
+    from key_resource_table_extractor_spark.schemas import (
+        DOCUMENT_SPANS_SCHEMA,
+    )
 
     sf = "/root/testdata/sf0.001"
-
-    def old_flat(row_model=None):
-        spans = entry._spans_from_documents(spark, sf)
-        spans = job.salted_repartition(spans, 4)
-        return job.data_spans(job.extract(spans, row_model=row_model))
-
-    def old_nested(**kw):
-        spans = entry._spans_from_documents(spark, sf)
-        spans = job.salted_repartition(spans, 4)
-        return job.extract_nested(spans, **kw)
+    ids = pq.read_table(f"{sf}/documents.parquet", columns=["doc_id"])
+    rows = []
+    for did in ids["doc_id"].to_pylist():
+        key = f"sfdoc_{did}"
+        rows.append((key, [
+            {"kind": k, "text": t, "media_ref": m, "offset": o}
+            for (k, t, m, o) in synth.generate_doc(key)
+        ]))
+    spans = job.salted_repartition(
+        spark.createDataFrame(rows, DOCUMENT_SPANS_SCHEMA), 4
+    )
 
     pairs = [
-        ("extract_spans", old_flat(), entry.q_extract_spans(spark, sf)),
+        ("extract_spans", job.data_spans(job.extract(spans)),
+         entry.q_extract_spans(spark, sf)),
         (
             "extract_spans_anchor",
-            old_flat("anchor"),
+            job.data_spans(job.extract(spans, row_model="anchor")),
             entry.q_extract_spans_anchor(spark, sf),
         ),
-        ("extract_nested", old_nested(), entry.q_extract_nested(spark, sf)),
+        ("extract_nested", job.extract_nested(spans),
+         entry.q_extract_nested(spark, sf)),
         (
             "extract_nested_colspans",
-            old_nested(with_colspans=True, row_model="anchor"),
+            job.extract_nested(spans, with_colspans=True, row_model="anchor"),
             entry.q_extract_nested_colspans(spark, sf),
         ),
     ]
@@ -228,4 +237,37 @@ def test_fused_synth_extract_equals_unfused_paths(spark):
         ra = sorted(map(tuple, a.collect()))
         rb = sorted(map(tuple, b.collect()))
         assert ra, f"{name}: empty result"
-        assert ra == rb, f"{name}: fused path diverged from unfused"
+        assert ra == rb, f"{name}: synth span source diverged from spans table"
+
+
+@pytest.mark.parametrize(
+    "kw",
+    [
+        {"output_mode": "nestd"},
+        {"row_model": "anchr"},
+        {"midcol_rowspans": True},
+        {"midcol_rowspans": True, "output_mode": "nested-colspans"},
+    ],
+    ids=["output_mode", "row_model", "midcol_flat", "midcol_votes"],
+)
+def test_option_typos_are_refused(spark, tmp_path, kw):
+    """A mistyped option raises instead of silently picking another mode:
+    every value outside the known set used to fall into an else branch
+    (nested output, the no-merge model), and midcol_rowspans was ignored
+    outside nested-colspans + anchor. ``run_extraction`` refuses before
+    it writes anything."""
+    from key_resource_table_extractor_spark import job
+    from key_resource_table_extractor_spark.extractor.pipeline import (
+        ExtractOptions,
+    )
+
+    with pytest.raises(ValueError):
+        ExtractOptions(**kw)
+    with pytest.raises(ValueError):
+        extract_pandas_batch(pdf_of(DOC), **kw)
+    df = job.synthesize_spans(spark, 4, partitions=1)
+    with pytest.raises(ValueError):
+        job.run_extraction(
+            spark, df, str(tmp_path / "out"), str(tmp_path / "cp"), **kw
+        )
+    assert not (tmp_path / "out").exists()

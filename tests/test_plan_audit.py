@@ -267,3 +267,43 @@ def test_ivf_assignment_is_map_side_arrow(spark):
     # the centroid matrix rides in the closure, not the plan: no literal
     # array-of-array scorer nodes
     assert "transform(" not in plan
+
+
+def test_extraction_is_one_map_in_arrow_stage(spark, tmp_path):
+    """Extraction has ONE Python boundary: every extraction plan — the
+    job over a parquet spans table (flat and nested) and the four
+    extract_* entry queries — holds exactly one MapInArrow node and no
+    other Python node (no MapInPandas, no grouped FlatMapGroupsInPandas
+    shape, no per-row eval)."""
+    import os
+    import re
+    import sys
+
+    from key_resource_table_extractor_spark import job
+    from key_resource_table_extractor_spark.plans.audit import explain_str
+
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
+    import __spark_entry__ as entry
+
+    path = str(tmp_path / "spans")
+    job.synthesize_spans(spark, 8, partitions=1).write.parquet(path)
+    spans = job.read_spans(spark, path)
+    plans = {
+        "extract": job.extract(spans),
+        "extract_nested": job.extract_nested(spans),
+        "extract_nested_colspans": job.extract_nested(
+            spans, with_colspans=True, row_model="anchor"
+        ),
+    }
+    queries = entry.queries()
+    for name in ("extract_spans", "extract_nested", "extract_nested_colspans",
+                 "extract_spans_anchor"):
+        plans[name + "_entry"] = queries[name](spark, SF_DIR)
+    for name, df in plans.items():
+        nodes = re.findall(r"^\(\d+\) (\w+)", explain_str(df), re.M)
+        python_nodes = [
+            n for n in nodes if re.search("Pandas|Arrow|Python", n)
+        ]
+        assert python_nodes == ["MapInArrow"], (name, nodes)
